@@ -65,7 +65,7 @@ def gen_orders(spark: SparkSession, n: int, seed: str = "kaop", partitions: int 
     """Batch twin of produce_batch (kafka_order_producer.py:130-157):
     n synthetic orders as a distributed DataFrame."""
     rng = spark.range(0, n, 1, partitions) if partitions else spark.range(n)
-    return rng.select(order_columns(F.col("id")))
+    return rng.select(order_columns(F.col("id"), seed))
 
 
 def gen_orders_stream(spark: SparkSession, rows_per_second: int = 2, seed: str = "kaop") -> DataFrame:
@@ -76,4 +76,4 @@ def gen_orders_stream(spark: SparkSession, rows_per_second: int = 2, seed: str =
         .option("rowsPerSecond", rows_per_second)
         .load()
     )
-    return rate.select(order_columns(F.col("value")) + [F.col("timestamp").alias("event_time")])
+    return rate.select(order_columns(F.col("value"), seed) + [F.col("timestamp").alias("event_time")])

@@ -173,6 +173,13 @@ def _zigzag_decode(buf: io.BytesIO) -> int:
 
 
 def avro_encode_order(order: dict) -> bytes:
+    """One order record in Avro binary.  ``ORDER_AVSC`` declares every
+    field non-null, so a null field raises ``ValueError``, as spark-avro's
+    ``to_avro`` fails on it, instead of being written as the string
+    ``"None"`` and decoding as a valid value."""
+    for fld in ORDER_COLS:
+        if order.get(fld) is None:
+            raise ValueError(f"order field {fld!r} is null; ORDER_AVSC declares it non-null")
     out = bytearray()
     for fld in ("orderId", "product"):
         s = str(order[fld]).encode("utf-8")
@@ -196,13 +203,14 @@ def avro_decode_order(payload: bytes) -> dict:
 def _avro_encode_fallback(df: DataFrame) -> DataFrame:
     def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            # Arrow hands a null number over as NaN: map it back to None
+            # so that the encoder rejects it (a NaN price is rejected too).
+            rows = pdf[list(ORDER_COLS)].astype(object)
+            rows = rows.where(rows.notna(), None)
             yield pd.DataFrame(
                 {
                     "key": pdf["orderId"],
-                    "value": [
-                        avro_encode_order(row)
-                        for row in pdf[list(ORDER_COLS)].to_dict("records")
-                    ],
+                    "value": [avro_encode_order(row) for row in rows.to_dict("records")],
                 }
             )
 

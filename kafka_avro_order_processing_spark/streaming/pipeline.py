@@ -5,13 +5,17 @@ avro_order_consumer.py:151-208: poll -> decode -> validate -> aggregate
 -> commit, DLQ on failure) becomes one streaming plan:
 
     readStream -> parse -> split(valid, invalid)
-      -> [valid:   groupBy(key).agg(...), update/complete mode]
-      -> [invalid: DLQ envelope -> DLQ sink]
+      -> [valid:    valid-row sink]
+      -> [invalid:  DLQ envelope -> DLQ sink]
+      -> [valid:    per-epoch per-key partials -> aggregated changelog]
 
-with both sinks written in the same ``foreachBatch`` epoch — the
-exactly-once analogue of the reference's commit-after-DLQ-routing
-(T5: offsets tracked per micro-batch via checkpointLocation, so a
-poison record never blocks the stream and never double-routes).
+with the three sinks written concurrently inside the same
+``foreachBatch`` epoch, and the epoch ending only when every write has
+finished — the exactly-once analogue of the reference's
+commit-after-DLQ-routing (T5: offsets tracked per micro-batch via
+checkpointLocation, so a poison record never blocks the stream and
+never double-routes).  ``order_pipeline_batch`` runs the same epoch
+writer over one batch DataFrame.
 
 State scale: per-key aggregate state lives in the Spark state store;
 for 100 TB/unbounded-key workloads configure RocksDB
@@ -23,9 +27,12 @@ from __future__ import annotations
 
 import tempfile
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..operators.aggregate import product_price_stats
 from ..operators.validate import dlq_envelope, split_valid_invalid
@@ -205,6 +212,88 @@ def run_streaming_running_avg(
     return drain_to_df(running_stats_per_record(keyed), "append")
 
 
+def _run_all(spark: SparkSession, writes: list[Callable[[], None]]) -> None:
+    """Run the sink writes at the same time, one driver thread each, and
+    return only when every one has finished; then raise the first
+    failure in sink order.
+
+    A sibling write is never left running: the caller unpersists the
+    epoch, returns, or hands the failure to a retry envelope only after
+    this returns.  Each thread inherits the calling thread's local
+    properties and job tags (the stream's job group included, so
+    ``query.stop()`` cancels the child jobs).  The wrapper is built once
+    per write: it clones the properties when built, and threads sharing
+    one clone would overwrite each other's SQL execution id.
+    """
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+    for f in futures:
+        f.result()
+
+
+def _write_epoch(
+    df: DataFrame,
+    valid_sink: str,
+    dlq_sink: str,
+    key: str,
+    value: str,
+    id_col: str | None,
+    source_topic: str = "orders",
+    aggregated_sink: str | None = None,
+    epoch_id: int = 0,
+    count: bool = False,
+) -> tuple[int, int] | None:
+    """The epoch body shared by the streaming and batch consumers: split
+    ``df`` once and write valid rows, the DLQ envelope and, if
+    ``aggregated_sink`` is set, this epoch's per-key partials, all three
+    concurrently (see ``_run_all``).
+
+    Each write is a small job whose cost is mostly fixed (job submission
+    plus the parquet commit), so running them side by side makes the
+    epoch as long as its slowest write instead of their sum.  With
+    ``count`` the valid and rejected row counts are observed on the two
+    row writes and returned, with no extra job.
+    """
+    # Persist the epoch once: the writes would otherwise each re-scan
+    # the source and re-run the validation split.
+    df = df.persist()
+    try:
+        valid, invalid = split_valid_invalid(df, key=key, value=value, id_col=id_col)
+        valid_out, invalid_out = valid, invalid
+        if count:
+            obs = Observation(), Observation()
+            valid_out = valid.observe(obs[0], F.count(F.lit(1)).alias("n"))
+            invalid_out = invalid.observe(obs[1], F.count(F.lit(1)).alias("n"))
+        writes = [
+            lambda: valid_out.write.mode("append").parquet(valid_sink),
+            lambda: dlq_envelope(invalid_out, source_topic=source_topic)
+            .write.mode("append").parquet(dlq_sink),
+        ]
+        if aggregated_sink is not None:
+            # Built from the unobserved split: an observation completes
+            # on its first action, which must be the valid-row write.
+            partials = valid.groupBy(F.col(key)).agg(
+                F.count("*").alias("order_count"),
+                # keep the exact decimal representation in the log;
+                # merge stays associative, cast to double only at read
+                F.sum(F.col(value).cast("decimal(18,2)")).alias("price_sum_dec"),
+                F.min(value).alias("minimum_price"),
+                F.max(value).alias("maximum_price"),
+            ).withColumn("epoch_id", F.lit(epoch_id))
+            writes.append(
+                lambda: partials.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("epoch_id")
+                .parquet(aggregated_sink)
+            )
+        _run_all(df.sparkSession, writes)
+        if count:
+            return obs[0].get["n"], obs[1].get["n"]
+        return None
+    finally:
+        df.unpersist()
+
+
 def order_pipeline_batch(
     orders: DataFrame,
     valid_sink: str,
@@ -214,28 +303,21 @@ def order_pipeline_batch(
     id_col: str | None = "orderId",
     source_topic: str = "orders",
 ) -> tuple[int, int]:
-    """The dual-sink epoch body (T5/T7) in batch form: split one parsed
-    DataFrame and write both branches — valid rows to the valid sink,
-    enveloped rejects to the DLQ sink.  (The streaming counterpart is
-    ``start_order_pipeline``, whose foreachBatch body performs the same
-    split per epoch.)
+    """The consumer's epoch body (T5/T7) in batch form: split one parsed
+    DataFrame and write valid rows to the valid sink and enveloped
+    rejects to the DLQ sink, the two writes running concurrently.  It is
+    the same epoch writer the foreachBatch body of
+    ``start_order_pipeline`` runs, without the aggregated sink.
 
     Returns (n_valid, n_rejected) for THIS call's input — the
     reference's processing counters (A9, avro_order_consumer.py:79-84)
-    — counted from the split itself, not by rescanning the sinks
-    (sinks are append-mode and may hold earlier batches).
+    — observed on the two writes themselves, not by rescanning the
+    sinks (sinks are append-mode and may hold earlier batches).
     """
-    # One scan for both writes and both counts: without the persist,
-    # each write/count would re-scan the source and re-split.
-    orders = orders.persist()
-    try:
-        valid, invalid = split_valid_invalid(orders, key=key, value=value, id_col=id_col)
-        valid.write.mode("append").parquet(valid_sink)
-        env = dlq_envelope(invalid, source_topic=source_topic)
-        env.write.mode("append").parquet(dlq_sink)
-        return valid.count(), invalid.count()
-    finally:
-        orders.unpersist()
+    return _write_epoch(
+        orders, valid_sink, dlq_sink, key, value, id_col,
+        source_topic=source_topic, count=True,
+    )
 
 
 def start_order_pipeline(
@@ -249,9 +331,13 @@ def start_order_pipeline(
     retry_handler=None,
     aggregated_sink: str | None = None,
 ):
-    """Streaming entry: one foreachBatch query writing the sinks per
-    epoch (at-least-once to non-transactional sinks; exactly-once with
-    transactional ones), optional retry envelope around the body.
+    """Streaming entry: one foreachBatch query whose epoch body writes
+    the valid-row sink, the DLQ sink and (with ``aggregated_sink``) the
+    aggregated changelog concurrently, and ends only when all of them
+    have finished (at-least-once to non-transactional sinks;
+    exactly-once with transactional ones).  The optional retry envelope
+    wraps the whole body, so a retry never starts while a write of the
+    failed attempt is still running.
 
     ``aggregated_sink`` implements the reference's `orders-aggregated`
     topic — created in scripts/setup_topics.sh:31-37 but never written
@@ -268,32 +354,10 @@ def start_order_pipeline(
     """
 
     def body(df: DataFrame, epoch_id: int) -> None:
-        # Persist the epoch once: three consumers (valid write, DLQ
-        # write, partials write) would otherwise each re-scan the
-        # micro-batch source and re-run the validation split — the same
-        # reason order_pipeline_batch persists its input.
-        df = df.persist()
-        try:
-            valid, invalid = split_valid_invalid(df, key=key, value=value, id_col=id_col)
-            valid.write.mode("append").parquet(valid_sink)
-            dlq_envelope(invalid).write.mode("append").parquet(dlq_sink)
-            if aggregated_sink is not None:
-                partials = valid.groupBy(F.col(key)).agg(
-                    F.count("*").alias("order_count"),
-                    # keep the exact decimal representation in the log;
-                    # merge stays associative, cast to double only at read
-                    F.sum(F.col(value).cast("decimal(18,2)")).alias("price_sum_dec"),
-                    F.min(value).alias("minimum_price"),
-                    F.max(value).alias("maximum_price"),
-                ).withColumn("epoch_id", F.lit(epoch_id))
-                (
-                    partials.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("epoch_id")
-                    .parquet(aggregated_sink)
-                )
-        finally:
-            df.unpersist()
+        _write_epoch(
+            df, valid_sink, dlq_sink, key, value, id_col,
+            aggregated_sink=aggregated_sink, epoch_id=epoch_id,
+        )
 
     fn = retry_handler.wrap_foreach_batch(body) if retry_handler else body
     return (
@@ -395,11 +459,28 @@ def read_aggregated_snapshot(
     partial sums merge associatively, so the result is bit-identical to
     ``product_price_stats`` over the union of all valid rows; downstream
     consumers wanting history instead read the changelog directly.
+
+    The changelog is read with the schema that the partials write in
+    ``_write_epoch`` produces (for a string key and a double value), not
+    an inferred one, which saves a footer-reading job per call.  A
+    changelog written with another schema still fails: a column of
+    another type fails the parquet scan, and a missing column, which
+    the scan would fill with NULLs, fails the fold (every partials row
+    is non-null in every column).
     """
-    log = spark.read.parquet(aggregated_sink)
+    schema = (
+        f"`{key}` string, order_count bigint, price_sum_dec decimal(28,2), "
+        "minimum_price double, maximum_price double, epoch_id int"
+    )
+    log = spark.read.schema(schema).parquet(aggregated_sink)
+    cols = ", ".join(f"`{c}`" for c in log.columns)
+    complete = F.expr(f"count(*) = count({cols})")
     total_dec = F.sum("price_sum_dec")
     return log.groupBy(F.col(key)).agg(
-        F.sum("order_count").alias("order_count"),
+        F.when(complete, F.sum("order_count")).otherwise(F.raise_error(F.lit(
+            f"aggregated changelog {aggregated_sink} has NULLs; "
+            f"it was not written with the schema {schema}"
+        ))).alias("order_count"),
         total_dec.cast("double").alias("price_sum"),
         (total_dec.cast("double") / F.sum("order_count")).alias("average_price"),
         F.min("minimum_price").alias("minimum_price"),

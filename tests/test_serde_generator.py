@@ -253,3 +253,58 @@ def test_datasource_stream_is_partitioned(spark):
         q.stop()
     assert seen["rows"] == 120
     assert len(seen["pids"]) == 4  # executor-parallel id ranges
+
+
+def _orders_digest(df) -> str:
+    import hashlib
+
+    rows = sorted(tuple(r) for r in df.select("orderId", "product", "price").collect())
+    return hashlib.sha256(repr(rows).encode()).hexdigest()
+
+
+def test_generator_honours_seed(spark):
+    """``seed`` reaches the draws: another seed gives other orders, while
+    the default seed's output (the registered generated_orders and its
+    DuckDB oracle) stays byte-for-byte what it was."""
+    default = _orders_digest(gen_orders(spark, 1000))
+    assert default == "67b874e09927aa4a27f07ca649da9dbb9e00be7bf6f63a02a9e1d05fb80f7f70"
+    assert _orders_digest(gen_orders(spark, 1000, seed="kaop")) == default
+    a = gen_orders(spark, 200, seed="a").collect()
+    b = gen_orders(spark, 200, seed="b").collect()
+    assert [r["orderId"] for r in a] == [r["orderId"] for r in b]
+    assert [(r["product"], r["price"]) for r in a] != [(r["product"], r["price"]) for r in b]
+    again = gen_orders(spark, 200, seed="a").collect()
+    assert [(r["product"], r["price"]) for r in again] == [(r["product"], r["price"]) for r in a]
+
+
+def test_generator_stream_honours_seed():
+    """The rate-source twin passes its seed to the same draws."""
+    from unittest import mock
+
+    from kafka_avro_order_processing_spark.sources import generator
+
+    spark = mock.MagicMock()
+    with mock.patch.object(generator, "order_columns", return_value=[]) as cols:
+        generator.gen_orders_stream(spark, seed="s7")
+    assert cols.call_args.args[1] == "s7"
+
+
+def test_avro_encoder_rejects_null_required_fields(spark):
+    """ORDER_AVSC declares all four fields non-null: a null field raises
+    instead of being written as the string "None" (which decoded as an
+    11th product and passed validation)."""
+    import pytest
+
+    order = {"orderId": "ORD-1", "product": "Mouse", "price": 9.99, "timestamp": 1}
+    for fld in ("orderId", "product", "price", "timestamp"):
+        with pytest.raises(ValueError, match=fld):
+            avro_encode_order({**order, fld: None})
+    if spark_avro_available(spark):
+        return
+    # the DataFrame fallback rejects it too, nulls of numeric columns included
+    for fld, typ in (("product", "string"), ("price", "double")):
+        df = spark.createDataFrame([("ORD-1", "Mouse", 9.99, 1)],
+                                   "orderId string, product string, price double, timestamp long")
+        df = df.withColumn(fld, F.lit(None).cast(typ))
+        with pytest.raises(Exception, match="ValueError"):
+            orders_to_avro(df).collect()

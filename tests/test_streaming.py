@@ -204,3 +204,198 @@ def test_update_mode_drain_requires_keys(spark):
     df = spark.readStream.format("rate").load()
     with _pytest.raises(ValueError, match="key_cols"):
         drain_to_df(df, "update")
+
+
+# --- the shared epoch writer -----------------------------------------------
+
+_ORDER_ROWS = [
+    ("ORD-0001", "Laptop", 999.99),
+    ("ORD-0002", "Mouse", -1.0),
+    (None, "Monitor", 10.0),
+    ("ORD-0004", None, 49.99),
+    ("ORD-0005", "Webcam", 0.0),
+    ("ORD-0006", "Webcam", 49.99),
+    ("ORD-0007", "Laptop", 1200.0),
+]
+_ORDER_SCHEMA = "orderId string, product string, price double"
+
+
+def _order_source(spark, tmp_path):
+    src = str(tmp_path / "src")
+    spark.createDataFrame(_ORDER_ROWS, _ORDER_SCHEMA).coalesce(1).write.parquet(src)
+    return src
+
+
+def _sink_rows(spark, path):
+    """Sink rows minus the DLQ's wall-clock ``failed_at``, sorted."""
+    return sorted(map(str, spark.read.parquet(path).drop("failed_at").collect()))
+
+
+def test_order_pipeline_batch_matches_stream(spark, tmp_path):
+    """The batch twin and the foreachBatch body share one epoch writer:
+    same counts, same valid and DLQ rows on the same input."""
+    from kafka_avro_order_processing_spark.streaming.pipeline import order_pipeline_batch
+
+    src = _order_source(spark, tmp_path)
+    counts = order_pipeline_batch(
+        spark.read.parquet(src), str(tmp_path / "b_valid"), str(tmp_path / "b_dlq")
+    )
+    q = start_order_pipeline(
+        spark.readStream.schema(_ORDER_SCHEMA).parquet(src),
+        valid_sink=str(tmp_path / "s_valid"),
+        dlq_sink=str(tmp_path / "s_dlq"),
+        checkpoint=str(tmp_path / "chk"),
+    )
+    q.awaitTermination()
+    assert counts == (3, 4)
+    for sink in ("valid", "dlq"):
+        batch_rows = _sink_rows(spark, str(tmp_path / f"b_{sink}"))
+        stream_rows = _sink_rows(spark, str(tmp_path / f"s_{sink}"))
+        assert batch_rows == stream_rows
+        assert len(batch_rows) == counts[sink == "dlq"]
+
+
+def test_order_pipeline_batch_runs_only_its_two_writes(spark, tmp_path):
+    """One call starts exactly two Spark jobs, its two sink writes: the
+    persisted input is filled by the first write to reach it, and the
+    counts come from observations on the writes.  (Counting with two
+    ``count()`` actions afterwards made it six jobs.)"""
+    from kafka_avro_order_processing_spark.streaming.pipeline import order_pipeline_batch
+
+    orders = spark.read.parquet(_order_source(spark, tmp_path))  # schema job outside
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()
+    group = f"epoch-writer-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "order_pipeline_batch job count")
+    try:
+        counts = order_pipeline_batch(orders, str(tmp_path / "valid"), str(tmp_path / "dlq"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == (3, 4)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert sc._jsc.getPersistentRDDs().size() == persisted
+
+
+class _RecordingHandler(RetryHandler):
+    """Logs, in order, each retry and each failure the envelope raises."""
+
+    def __init__(self, events):
+        super().__init__(jitter=False, sleep=lambda _s: events.append("retry"))
+        self.events = events
+
+    def execute_with_retry(self, fn, *args, **kwargs):
+        try:
+            return super().execute_with_retry(fn, *args, **kwargs)
+        except BaseException:
+            self.events.append("raise")
+            raise
+
+
+def _failing_dlq_write(monkeypatch, exc):
+    """Make the first DLQ write raise ``exc`` at once while the valid-row
+    write of the same epoch is held back, and log every write's end.  An
+    epoch that ended before its slow sibling finished would log
+    ``retry``/``raise`` ahead of that sibling's end."""
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    events = []
+    real = DataFrameWriter.parquet
+    left = [1]
+
+    def parquet(self, path, *args, **kwargs):
+        sink = path.rsplit("/", 1)[-1]
+        try:
+            if sink == "dlq" and left[0] > 0:
+                left[0] -= 1
+                raise exc
+            if sink == "valid":
+                time.sleep(0.5)
+            return real(self, path, *args, **kwargs)
+        finally:
+            events.append(f"end {sink}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return events
+
+
+def _run_stream(spark, tmp_path, src, handler):
+    q = start_order_pipeline(
+        spark.readStream.schema(_ORDER_SCHEMA).parquet(src),
+        valid_sink=str(tmp_path / "valid"),
+        dlq_sink=str(tmp_path / "dlq"),
+        checkpoint=str(tmp_path / "chk"),
+        retry_handler=handler,
+        aggregated_sink=str(tmp_path / "agg"),
+    )
+    q.awaitTermination()
+
+
+def test_epoch_writer_retries_after_every_write_ended(spark, tmp_path, monkeypatch):
+    """A retryable sink failure is retried by the RetryHandler envelope,
+    and the retry starts only after every write of the failed attempt
+    has ended."""
+    from kafka_avro_order_processing_spark.streaming.pipeline import read_aggregated_snapshot
+    from kafka_avro_order_processing_spark.streaming.retry import RetryableError
+
+    src = _order_source(spark, tmp_path)
+    events = _failing_dlq_write(monkeypatch, RetryableError("sink timeout"))
+    _run_stream(spark, tmp_path, src, _RecordingHandler(events))
+    first = events[: events.index("retry")]
+    assert sorted(first) == ["end agg", "end dlq", "end valid"]
+    assert events.count("retry") == 1 and "raise" not in events
+    assert spark.read.parquet(str(tmp_path / "dlq")).count() == 4
+    # the replayed epoch overwrites its changelog partition
+    snap = {r["product"]: r["order_count"]
+            for r in read_aggregated_snapshot(spark, str(tmp_path / "agg")).collect()}
+    assert snap == {"Laptop": 2, "Webcam": 1}
+
+
+def test_epoch_writer_permanent_failure_after_every_write_ended(spark, tmp_path, monkeypatch):
+    """A permanent sink failure surfaces as PermanentError without a
+    retry, and only after every write of the epoch has ended."""
+    from pyspark.errors import StreamingQueryException
+
+    src = _order_source(spark, tmp_path)
+    events = _failing_dlq_write(monkeypatch, OSError("sink rejected the write"))
+    with pytest.raises(StreamingQueryException, match="PermanentError"):
+        _run_stream(spark, tmp_path, src, _RecordingHandler(events))
+    assert sorted(events[: events.index("raise")]) == ["end agg", "end dlq", "end valid"]
+    assert "retry" not in events
+
+
+def test_aggregated_snapshot_rejects_another_schema(spark, tmp_path):
+    """The snapshot reads the changelog with the partials' known schema;
+    a changelog written with another schema must fail, not fold NULLs."""
+    from kafka_avro_order_processing_spark.streaming.pipeline import read_aggregated_snapshot
+
+    wrong_type = str(tmp_path / "wrong_type")
+    spark.createDataFrame(
+        [("Laptop", 1, 10.0, 10.0, 10.0, 0)],
+        "product string, order_count bigint, price_sum_dec double, "
+        "minimum_price double, maximum_price double, epoch_id int",
+    ).write.partitionBy("epoch_id").parquet(wrong_type)
+    with pytest.raises(Exception, match="(?i)parquet|decimal|convert"):
+        read_aggregated_snapshot(spark, wrong_type).collect()
+
+    missing = str(tmp_path / "missing")
+    spark.createDataFrame(
+        [("Laptop", 1, 10.0, 10.0, 0)],
+        "product string, order_count bigint, "
+        "minimum_price double, maximum_price double, epoch_id int",
+    ).write.partitionBy("epoch_id").parquet(missing)
+    with pytest.raises(Exception, match="not written with the schema"):
+        read_aggregated_snapshot(spark, missing).collect()
+
+    other_key = str(tmp_path / "other_key")
+    spark.createDataFrame(
+        [("purchase", 1, 10.0, 10.0, 10.0, 0)],
+        "event_type string, order_count bigint, price_sum_dec double, "
+        "minimum_price double, maximum_price double, epoch_id int",
+    ).selectExpr("event_type", "order_count", "cast(price_sum_dec as decimal(28,2)) price_sum_dec",
+                 "minimum_price", "maximum_price", "epoch_id"
+    ).write.partitionBy("epoch_id").parquet(other_key)
+    with pytest.raises(Exception, match="not written with the schema"):
+        read_aggregated_snapshot(spark, other_key).collect()
