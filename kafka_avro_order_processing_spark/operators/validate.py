@@ -7,6 +7,14 @@ parsed DataFrame instead of try/except per record.  Both branches reuse
 the same scan (Catalyst caches the common subplan inside one
 foreachBatch epoch in streaming; in batch the scan is cheap and pushed
 down).
+
+One departure from the reference: its ``price <= 0`` check (SURVEY.md
+P2) lets a NaN price through, since every comparison with NaN is false
+in Python, and Spark orders NaN above every number, so ``NaN > 0`` is
+true here too.  A JSON ``NaN`` or ``Infinity`` decodes to a double
+(``orders_from_json``), and one such row would poison every per-product
+sum it reaches.  So a NaN or infinite price is invalid and takes the DLQ
+branch as ``Invalid price: NaN`` / ``Invalid price: Infinity``.
 """
 
 from __future__ import annotations
@@ -18,9 +26,16 @@ from pyspark.sql import functions as F
 def validity_predicate(
     key: str = "product", value: str = "price", id_col: str | None = "orderId"
 ) -> Column:
-    """P1+P2: required fields present and price strictly positive
-    (/root/reference/src/consumer/avro_order_consumer.py:99-103)."""
-    pred = F.col(key).isNotNull() & F.col(value).isNotNull() & (F.col(value) > 0)
+    """P1+P2: required fields present and price strictly positive and
+    finite (reference src/consumer/avro_order_consumer.py:99-103)."""
+    price = F.col(value)
+    pred = (
+        F.col(key).isNotNull()
+        & price.isNotNull()
+        & (price > 0)
+        & ~F.isnan(price)
+        & (price < F.lit(float("inf")))
+    )
     if id_col is not None:
         pred = pred & F.col(id_col).isNotNull()
     return pred

@@ -15,6 +15,7 @@ TIMESTAMP_NS to TIMESTAMP, keeping oracle comparisons exact).
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,16 +46,43 @@ TABLES = (
 #: the same reader builds in ~25 ms and the scan/pushdown behavior is
 #: byte-identical (verified: equal schemas, PushedFilters intact).
 #: The mtime+size key invalidates the entry if a file is rewritten; no
-#: row data is ever cached here.
+#: row data is ever cached here.  A directory's own stat does not change
+#: when a part file is rewritten in place, so a directory table is keyed
+#: on the name, size and mtime of every visible file below it instead.
 _SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+
+
+def _hidden(name: str) -> bool:
+    # Spark's file listing skips these (InMemoryFileIndex); "=" keeps
+    # partition directories such as "_c=1" visible.
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _visible_files(root: str) -> tuple:
+    """(relative path, size, mtime_ns) of every file Spark lists under
+    ``root``."""
+    files = []
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not _hidden(d)]
+        for name in filenames:
+            if _hidden(name):
+                continue
+            full = os.path.join(dirpath, name)
+            st = os.stat(full)
+            files.append((os.path.relpath(full, root), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
 
 
 def _parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
     try:
         st = os.stat(path)
+        real = os.path.realpath(path)
+        if stat.S_ISDIR(st.st_mode):
+            key = (real, _visible_files(real))
+        else:
+            key = (real, st.st_mtime_ns, st.st_size)
     except OSError:
         return None  # non-local/remote path: fall back to inference
-    key = (os.path.realpath(path), st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         schema = spark.read.parquet(path).schema

@@ -3,6 +3,7 @@ schema-evolution reads (a training-data lake reality)."""
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import functions as F
@@ -116,3 +117,26 @@ def test_compact_parquet_shrinks_small_files(spark, tmp_path):
     assert stats["rows"] == 10_000
     got = {r["id"] for r in spark.read.parquet(dst).collect()}
     assert got == set(range(10_000))
+
+
+def test_directory_table_schema_follows_rewritten_part_file(spark, tmp_path):
+    """Rewriting a directory table's part file in place leaves the
+    directory's own stat unchanged; the cached schema must still follow."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kafka_avro_order_processing_spark.sources.tables import load_table
+
+    table_dir = tmp_path / "orders.parquet"
+    table_dir.mkdir()
+    part = table_dir / "part-00000.parquet"
+    pq.write_table(pa.table({"o_orderkey": [1, 2]}), part)
+    assert load_table(spark, str(tmp_path), "orders").columns == ["o_orderkey"]
+
+    dir_stat = os.stat(table_dir)
+    pq.write_table(pa.table({"o_orderkey": [1, 2], "o_comment": ["a", "b"]}), part)
+    assert (os.stat(table_dir).st_mtime_ns, os.stat(table_dir).st_size) == (
+        dir_stat.st_mtime_ns, dir_stat.st_size)
+    df = load_table(spark, str(tmp_path), "orders")
+    assert df.columns == ["o_orderkey", "o_comment"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a"), (2, "b")]

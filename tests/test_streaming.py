@@ -399,3 +399,23 @@ def test_aggregated_snapshot_rejects_another_schema(spark, tmp_path):
     ).write.partitionBy("epoch_id").parquet(other_key)
     with pytest.raises(Exception, match="not written with the schema"):
         read_aggregated_snapshot(spark, other_key).collect()
+
+
+@pytest.mark.parametrize("price, shown", [
+    ("NaN", "NaN"), ("Infinity", "Infinity"), ("-Infinity", "-Infinity"),
+])
+def test_non_finite_price_takes_the_dlq_branch(spark, price, shown):
+    """A JSON NaN or infinite price decodes to a double; it is rejected,
+    where the reference's ``price <= 0`` check would pass a NaN."""
+    from kafka_avro_order_processing_spark.operators.validate import split_valid_invalid
+    from kafka_avro_order_processing_spark.sources.serde import orders_from_json
+
+    wire = spark.createDataFrame([
+        ('{"orderId":"ORD-1","product":"Mouse","price":%s,"timestamp":1}' % price,),
+        ('{"orderId":"ORD-2","product":"Mouse","price":9.5,"timestamp":1}',),
+    ], "value string")
+    valid, invalid = split_valid_invalid(orders_from_json(wire))
+    assert [r["orderId"] for r in valid.collect()] == ["ORD-2"]
+    assert [(r["orderId"], r["error_message"]) for r in invalid.collect()] == [
+        ("ORD-1", f"Invalid price: {shown}")
+    ]
